@@ -519,12 +519,17 @@ def sessionize_capped(
     # to vectorized code).  Same stage as the window (no new exchange),
     # so each partition arrives sorted with users contiguous; the last
     # user of every batch is carried into the next batch so a user
-    # split across Arrow batches folds exactly once.
+    # split across Arrow batches folds exactly once.  A null user_id is
+    # one key, as in DuckDB's PARTITION BY: the window sorts nulls into
+    # one contiguous run, and both comparisons below treat null == null
+    # (a plain `==`/`!=` would split every null-id event into its own
+    # session, NaN never being equal to itself).
     def fold_partition(batches):
         def emit(pdf: pd.DataFrame):
             uids = pdf["user_id"].to_numpy()
+            null = pdf["user_id"].isna().to_numpy()
             bounds = np.flatnonzero(
-                np.r_[True, uids[1:] != uids[:-1]]
+                np.r_[True, (uids[1:] != uids[:-1]) & ~(null[1:] & null[:-1])]
             )
             bounds = np.append(bounds, len(uids))
             out = [
@@ -541,7 +546,10 @@ def sessionize_capped(
             if len(pdf) == 0:
                 continue
             last_uid = pdf["user_id"].iloc[-1]
-            mask = (pdf["user_id"] == last_uid).to_numpy()
+            if pd.isna(last_uid):
+                mask = pdf["user_id"].isna().to_numpy()
+            else:
+                mask = (pdf["user_id"] == last_uid).to_numpy()
             carry = pdf[mask]
             head = pdf[~mask]
             if len(head):

@@ -20,15 +20,18 @@ dependency-free codecs (no fake tier remains):
 
 Formats outside these (MP4, CCITT/JPEG-in-TIFF, subsampled progressive
 color) raise NotImplementedError — honest scope guards, not stubs.
-Everything Spark-side — schema, Arrow batch shape, `mapInPandas`
-signature, partition sizing — is format-agnostic, so adding codecs
-only widens the set of accepted magics.
+Everything Spark-side lives in one row-map helper, :func:`_row_map`:
+each DataFrame wrapper below is a per-row function (doc id and text or
+payload in, output tuples out) plus its output schema, and the helper
+owns the column selection, the single Arrow-batched `mapInPandas` and
+the output frame build — so adding a codec only adds the per-row
+function.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
@@ -63,6 +66,78 @@ IMAGE_FEATURE_SCHEMA = T.StructType(
         T.StructField("phash", T.LongType(), True),
     ]
 )
+
+
+# output schema of every text-to-media encoder
+_PAYLOAD_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("payload", T.BinaryType(), False),
+    ]
+)
+
+
+def _row_map(
+    df: DataFrame,
+    id_col: str,
+    in_col: str,
+    fn: Callable[[int, object], Iterable[tuple]],
+    schema: T.StructType,
+) -> DataFrame:
+    """Run ``fn`` over every (doc_id, value) row of ``df`` as one
+    Arrow-batched ``mapInPandas`` projection — no shuffle.
+
+    ``fn(did, value)`` gets the id as an int and the ``in_col`` value
+    (Arrow hands a binary column over as ``bytes``) and yields one tuple
+    per output row holding the schema's fields after ``doc_id``, in
+    schema order: one tuple for a 1:1 map, one per frame for a frame
+    explosion.  The helper prepends the id and builds each output
+    column from the schema's field names.  Rows are decoded one at a
+    time, so a decode working set never outlives its row."""
+    names = schema.fieldNames()
+    cols = df.select(F.col(id_col).alias("doc_id"), F.col(in_col).alias("__in"))
+
+    def map_partition(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = []
+            for did, value in zip(pdf["doc_id"], pdf["__in"]):
+                did = int(did)
+                for rest in fn(did, value):
+                    out.append((did, *rest))
+            yield pd.DataFrame.from_records(out, columns=names)
+
+    return cols.mapInPandas(map_partition, schema)
+
+
+def _round6_half_up(x: float) -> float:
+    """HALF_UP at 6 decimals on the double's exact binary value — what
+    DuckDB/Spark ROUND do; Python round() half-evens, which diverges
+    when a mean over n = w·h pixels (n a power of two) lands exactly on
+    a 5e-7 tie."""
+    return float(Decimal(float(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
+def _channel_sums(pixels: np.ndarray, n_channels: int = 3) -> tuple[int, ...]:
+    """Exact per-channel integer sums of channel-interleaved pixels."""
+    sums = pixels.reshape(-1, n_channels).sum(axis=0, dtype=np.int64)
+    return tuple(int(v) for v in sums)
+
+
+def _gray_stats(d: dict) -> tuple:
+    """(width, height, mean, min, max) of a decoded 8-bit gray image;
+    the integer pixel sum is divided once in float64, then
+    :func:`_round6_half_up`."""
+    px = d["pixels"]
+    mean = _round6_half_up(px.sum(dtype=np.int64) / px.size)
+    return int(d["width"]), int(d["height"]), mean, int(px.min()), int(px.max())
+
+
+def _fixture_palette(p: int, coefs=((37, 11), (59, 23), (83, 5))) -> np.ndarray:
+    """The text fixtures' p-entry RGB palette: channel c of entry k is
+    (a_c·k + b_c) mod 256 for ``coefs`` = ((a_R, b_R), (a_G, b_G),
+    (a_B, b_B)) — the formula the indexed-color oracles replay."""
+    k = np.arange(p, dtype=np.int64)
+    return np.stack([(a * k + b) % 256 for a, b in coefs], axis=1).astype(np.uint8)
 
 
 def box_downsample_2x(pixels: np.ndarray) -> np.ndarray:
@@ -262,37 +337,25 @@ def extract_image_features(
     """Decode + feature-extract image payloads via `mapInPandas`
     (REAL decode only — :func:`decode_image` dispatches on magic).
 
-    The decode working set is bounded by slicing each incoming Arrow
-    batch into ``batch_rows``-row chunks inside the generator — no
-    session conf is touched.  For 100 TB media where even the *raw
-    payload* Arrow batch must shrink (payloads of many MB each), pass
-    ``set_arrow_batch_conf=True`` to also lower
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``; note that conf is
-    session-wide and stays set (it is read at execution time, so a
-    save/restore around this lazy builder would be a no-op).
+    Payloads are decoded one row at a time, so the decode working set
+    is one image and no session conf is touched.  For 100 TB media
+    where even the *raw payload* Arrow batch must shrink (payloads of
+    many MB each), pass ``set_arrow_batch_conf=True`` to lower
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` to ``batch_rows``;
+    note that conf is session-wide and stays set (it is read at
+    execution time, so a save/restore around this lazy builder would be
+    a no-op).
     """
-    spark = df.sparkSession
     if set_arrow_batch_conf:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows))
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload"))
+        df.sparkSession.conf.set(
+            "spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows)
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for start in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[start : start + batch_rows]
-                feats = [decode_image(bytes(p)) for p in chunk["__payload"]]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": chunk["doc_id"].astype("int64"),
-                        "width": pd.array([f["width"] for f in feats], dtype="Int32"),
-                        "height": pd.array([f["height"] for f in feats], dtype="Int32"),
-                        "n_bytes": chunk["__payload"].map(len).astype("int64"),
-                        "mean_intensity": [f["mean_intensity"] for f in feats],
-                        "phash": pd.array([f["phash"] for f in feats], dtype="Int64"),
-                    }
-                )
+    def row(did, payload):
+        f = decode_image(payload)
+        yield f["width"], f["height"], len(payload), f["mean_intensity"], f["phash"]
 
-    return cols.mapInPandas(batches, IMAGE_FEATURE_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, IMAGE_FEATURE_SCHEMA)
 
 
 BMP_CHANNEL_STATS_SCHEMA = T.StructType(
@@ -317,28 +380,14 @@ def encode_text_bmp(
     headers, bottom-up padded rows) — the fixture-side half of the real
     decode path, with pixel statistics independently computable from the
     text by a SQL oracle."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+        w = 1 + (len(tb) % 16)
+        h = 1 + (did % 12)
+        px = np.resize(tb, w * h * 3).reshape(h, w, 3)  # cyclic tile
+        yield (encode_bmp(px),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                w = 1 + (len(tb) % 16)
-                h = 1 + (int(did) % 12)
-                px = np.resize(tb, w * h * 3).reshape(h, w, 3)  # cyclic tile
-                payloads.append(encode_bmp(px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads})
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 def bmp_channel_stats(
@@ -352,32 +401,15 @@ def bmp_channel_stats(
     oracle reproduces the values bit-for-bit.  Scale shape: Arrow-batched
     mapInPandas projection, no shuffle; payload batches are bounded by
     the incoming Arrow batch size."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload"))
+    def row(did, payload):
+        d = decode_bmp(payload)
+        if d.get("n_channels", 3) != 3:
+            raise ValueError("bmp_channel_stats expects 24-bpp BMP")
+        n = d["width"] * d["height"]
+        sums = _channel_sums(d["pixels"])  # B, G, R
+        yield d["width"], d["height"], *(_round6_half_up(s / n) for s in sums)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("doc_id", "width", "height", "mean_b", "mean_g", "mean_r")}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_bmp(bytes(payload))
-                if d.get("n_channels", 3) != 3:
-                    raise ValueError("bmp_channel_stats expects 24-bpp BMP")
-                w, h, px = d["width"], d["height"], d["pixels"]
-                n = w * h
-                out["doc_id"].append(int(did))
-                out["width"].append(w)
-                out["height"].append(h)
-                for ci, key in enumerate(("mean_b", "mean_g", "mean_r")):
-                    # HALF_UP on the double's exact binary value — what
-                    # DuckDB/Spark ROUND do; Python round() half-evens,
-                    # which diverges when n = w·h is a power of two and
-                    # the mean lands exactly on a 5e-7 tie
-                    mean = float(int(px[ci::3].sum(dtype=np.int64))) / n
-                    out[key].append(
-                        float(Decimal(mean).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-                    )
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, BMP_CHANNEL_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, BMP_CHANNEL_STATS_SCHEMA)
 
 
 def encode_text_ppm(
@@ -389,29 +421,15 @@ def encode_text_ppm(
     h = 1 + id mod 9; pixel byte i = text byte (2·i) mod octet_length —
     a stride-2 cyclic sample, deliberately different from the BMP
     fixture so the two codecs can't share a decode bug."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+        w = 1 + (len(tb) % 13)
+        h = 1 + (did % 9)
+        idx = (np.arange(w * h * 3) * 2) % len(tb)
+        header = f"P6\n# doc {did}\n{w} {h}\n255\n".encode()
+        yield (header + tb[idx].tobytes(),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                w = 1 + (len(tb) % 13)
-                h = 1 + (int(did) % 9)
-                idx = (np.arange(w * h * 3) * 2) % len(tb)
-                header = f"P6\n# doc {int(did)}\n{w} {h}\n255\n".encode()
-                payloads.append(header + tb[idx].tobytes())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads})
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 PPM_CHANNEL_STATS_SCHEMA = T.StructType(
@@ -432,26 +450,13 @@ def ppm_channel_stats(
     """Per-image per-channel means from genuinely parsed PPM payloads
     (:func:`decode_ppm`: header fields, comment lines, raw RGB planes).
     Same HALF_UP round-6 discipline as :func:`bmp_channel_stats`."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload"))
+    def row(did, payload):
+        d = decode_ppm(payload)
+        n = d["width"] * d["height"]
+        sums = _channel_sums(d["pixels"])  # R, G, B
+        yield d["width"], d["height"], *(_round6_half_up(s / n) for s in sums)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("doc_id", "width", "height", "mean_r", "mean_g", "mean_b")}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_ppm(bytes(payload))
-                w, h, px = d["width"], d["height"], d["pixels"]
-                n = w * h
-                out["doc_id"].append(int(did))
-                out["width"].append(w)
-                out["height"].append(h)
-                for ci, key in enumerate(("mean_r", "mean_g", "mean_b")):
-                    mean = float(int(px[ci::3].sum(dtype=np.int64))) / n
-                    out[key].append(
-                        float(Decimal(mean).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-                    )
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, PPM_CHANNEL_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, PPM_CHANNEL_STATS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1989,46 +1994,22 @@ def encode_text_jpeg(
     are identically zero; the all-ones quant table keeps DC integral),
     so the decode side's stats are text-derivable while the codec path
     — DCT, Huffman, stuffing — is completely real."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                wb = 1 + (len(tb) % 4)
-                hb = 1 + (int(did) % 3)
-                vals = tb[np.arange(wb * hb) % len(tb)].reshape(hb, wb)
-                px = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-                if progressive:
-                    if quant16:
-                        raise ValueError(
-                            "progressive + quant16 not a supported combination"
-                        )
-                    payloads.append(
-                        encode_gray_jpeg_progressive(
-                            px, restart_interval=restart_interval
-                        )
-                    )
-                else:
-                    payloads.append(
-                        encode_gray_jpeg(
-                            px, quant16=quant16, restart_interval=restart_interval
-                        )
-                    )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        wb = 1 + (len(tb) % 4)
+        hb = 1 + (did % 3)
+        vals = tb[np.arange(wb * hb) % len(tb)].reshape(hb, wb)
+        px = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
+        if not progressive:
+            yield (
+                encode_gray_jpeg(px, quant16=quant16, restart_interval=restart_interval),
             )
+        elif quant16:
+            raise ValueError("progressive + quant16 not a supported combination")
+        else:
+            yield (encode_gray_jpeg_progressive(px, restart_interval=restart_interval),)
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 JPEG_GRAY_STATS_SCHEMA = T.StructType(
@@ -2051,31 +2032,10 @@ def jpeg_gray_stats(
     height, mean (integer pixel sum divided once in float64, HALF_UP
     round 6 — the :func:`bmp_channel_stats` discipline), min, max.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        yield _gray_stats(decode_jpeg_gray(payload))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in ("doc_id", "width", "height", "mean_gray", "min_gray", "max_gray")
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_jpeg_gray(bytes(payload))
-                px = d["pixels"]
-                mean = float(int(px.sum(dtype=np.int64))) / px.size
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["mean_gray"].append(
-                    float(Decimal(mean).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-                )
-                out["min_gray"].append(int(px.min()))
-                out["max_gray"].append(int(px.max()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, JPEG_GRAY_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, JPEG_GRAY_STATS_SCHEMA)
 
 
 def encode_text_rgb_png(
@@ -2085,30 +2045,14 @@ def encode_text_rgb_png(
     oracle predicts every pixel): w = 1 + length mod 12,
     h = 1 + id mod 8, channel c of pixel i (row-major RGB) = text byte
     ((3i + c) mod L)."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 12)
+        h = 1 + (did % 8)
+        px = tb[np.arange(w * h * 3) % len(tb)].reshape(h, w, 3)
+        yield (encode_rgb_png(px),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                w = 1 + (len(tb) % 12)
-                h = 1 + (int(did) % 8)
-                px = tb[np.arange(w * h * 3) % len(tb)].reshape(h, w, 3)
-                payloads.append(encode_rgb_png(px))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 def png_rgb_stats(
@@ -2118,25 +2062,11 @@ def png_rgb_stats(
     (:func:`decode_png_rgb`): exact BIGINTs, no float anywhere —
     the color twin of :func:`png_gray_stats` with the m10 sum
     discipline.  Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_png_rgb(payload)
+        yield int(d["width"]), int(d["height"]), *_channel_sums(d["pixels"])
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("doc_id", "width", "height", "sum_r", "sum_g", "sum_b")}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_png_rgb(bytes(payload))
-                px = d["pixels"].reshape(-1, 3).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["sum_r"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_b"].append(int(px[:, 2].sum()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, JPEG_COLOR_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, JPEG_COLOR_STATS_SCHEMA)
 
 
 def encode_text_color_jpeg(
@@ -2157,43 +2087,23 @@ def encode_text_color_jpeg(
     precisely the fixed-point YCbCr round-trip of the source color —
     replayable in SQL because every step is integer arithmetic with
     power-of-two divisions."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        L = len(tb)
+        wm = 1 + (L % 3)
+        hm = 1 + (did % 2)
+        m = np.arange(wm * hm)
+        cols_rgb = np.stack(
+            [tb[m % L], tb[(2 * m + 1) % L], tb[(3 * m + 2) % L]],
+            axis=-1,
+        ).reshape(hm, wm, 3)
+        img = np.repeat(np.repeat(cols_rgb, 16, axis=0), 16, axis=1).astype(np.uint8)
+        # progressive is 4:4:4 SOF2 — on flat MCUs the 4:2:0 chroma mean
+        # is identity, so m10's oracle holds verbatim
+        encode = encode_color_jpeg_progressive if progressive else encode_color_jpeg
+        yield (encode(img),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                L = len(tb)
-                wm = 1 + (L % 3)
-                hm = 1 + (int(did) % 2)
-                m = np.arange(wm * hm)
-                cols_rgb = np.stack(
-                    [tb[m % L], tb[(2 * m + 1) % L], tb[(3 * m + 2) % L]],
-                    axis=-1,
-                ).reshape(hm, wm, 3)
-                img = np.repeat(np.repeat(cols_rgb, 16, axis=0), 16, axis=1)
-                if progressive:
-                    # 4:4:4 SOF2 — on flat MCUs the 4:2:0 chroma mean
-                    # is identity, so m10's oracle holds verbatim
-                    payloads.append(
-                        encode_color_jpeg_progressive(img.astype(np.uint8))
-                    )
-                else:
-                    payloads.append(encode_color_jpeg(img.astype(np.uint8)))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 JPEG_COLOR_STATS_SCHEMA = T.StructType(
@@ -2216,25 +2126,11 @@ def jpeg_color_stats(
     upsample → fixed-point YCbCr→RGB).  Sums are exact BIGINTs — no
     float anywhere in the output, the strongest oracle discipline.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_color_jpeg(payload)
+        yield int(d["width"]), int(d["height"]), *_channel_sums(d["pixels"])
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("doc_id", "width", "height", "sum_r", "sum_g", "sum_b")}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_color_jpeg(bytes(payload))
-                px = d["pixels"].reshape(-1, 3).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["sum_r"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_b"].append(int(px[:, 2].sum()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, JPEG_COLOR_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, JPEG_COLOR_STATS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2965,36 +2861,15 @@ def encode_text_gif(
     (59k+23) mod 256, (83k+5) mod 256), index of pixel i = byte
     (i mod L) mod p — so the SAME oracle text verifies a completely
     different container + compressor."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 11)
+        h = 1 + (did % 6)
+        p = 2 + (did % 15)
+        idx = (tb[np.arange(w * h) % len(tb)] % p).astype(np.uint8)
+        yield (encode_gif(idx.reshape(h, w), _fixture_palette(p)),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                w = 1 + (len(tb) % 11)
-                h = 1 + (int(did) % 6)
-                p = 2 + (int(did) % 15)
-                k = np.arange(p, dtype=np.int64)
-                pal = np.stack(
-                    [(37 * k + 11) % 256, (59 * k + 23) % 256, (83 * k + 5) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                idx = (tb[np.arange(w * h) % len(tb)] % p).astype(np.uint8)
-                payloads.append(encode_gif(idx.reshape(h, w), pal))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 def gif_stats(
@@ -3005,32 +2880,16 @@ def gif_stats(
     palette lookup): exact BIGINTs — any bit-packing, code-width, or
     KwKwK bug scrambles the index stream and breaks every channel.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_gif(payload)
+        yield (
+            int(d["width"]),
+            int(d["height"]),
+            int(d["palette_size"]),
+            *_channel_sums(d["pixels"]),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in (
-                    "doc_id", "width", "height", "palette_size",
-                    "sum_r", "sum_g", "sum_b",
-                )
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_gif(bytes(payload))
-                px = d["pixels"].reshape(-1, 3).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["palette_size"].append(int(d["palette_size"]))
-                out["sum_r"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_b"].append(int(px[:, 2].sum()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, PALETTE_PNG_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, PALETTE_PNG_STATS_SCHEMA)
 
 
 def encode_text_local_gif(
@@ -3046,43 +2905,17 @@ def encode_text_local_gif(
     through the wrong table still parses cleanly but produces the
     global formula's sums — the override itself is what the oracle
     pins."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 11)
+        h = 1 + (did % 6)
+        gpal = _fixture_palette(2 + (did % 15))
+        q = 2 + ((3 * did + 1) % 15)
+        lpal = _fixture_palette(q, ((41, 13), (67, 29), (89, 3)))
+        idx = (tb[np.arange(w * h) % len(tb)] % q).astype(np.uint8)
+        yield (encode_gif(idx.reshape(h, w), gpal, lpal),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                did = int(did)
-                w = 1 + (len(tb) % 11)
-                h = 1 + (did % 6)
-                p = 2 + (did % 15)
-                k = np.arange(p, dtype=np.int64)
-                gpal = np.stack(
-                    [(37 * k + 11) % 256, (59 * k + 23) % 256, (83 * k + 5) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                q = 2 + ((3 * did + 1) % 15)
-                kq = np.arange(q, dtype=np.int64)
-                lpal = np.stack(
-                    [(41 * kq + 13) % 256, (67 * kq + 29) % 256, (89 * kq + 3) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                idx = (tb[np.arange(w * h) % len(tb)] % q).astype(np.uint8)
-                payloads.append(encode_gif(idx.reshape(h, w), gpal, lpal))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 LOCAL_GIF_STATS_SCHEMA = T.StructType(
@@ -3107,27 +2940,17 @@ def gif_local_stats(
     ``palette_size`` is the (padded) size of the table the pixels were
     actually resolved through.  Arrow-batched mapInPandas projection,
     no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_gif(payload)
+        yield (
+            int(d["width"]),
+            int(d["height"]),
+            int(d["palette_size"]),
+            bool(d["local_palette"]),
+            *_channel_sums(d["pixels"]),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in LOCAL_GIF_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_gif(bytes(payload))
-                px = d["pixels"].reshape(-1, 3).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["palette_size"].append(int(d["palette_size"]))
-                out["used_local"].append(bool(d["local_palette"]))
-                out["sum_r"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_b"].append(int(px[:, 2].sum()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, LOCAL_GIF_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, LOCAL_GIF_STATS_SCHEMA)
 
 
 def encode_text_palette_png(
@@ -3144,38 +2967,15 @@ def encode_text_palette_png(
     pixel i = text byte (i mod L) mod p.  ``depth`` picks the wire
     format — the fixture's p ≤ 16 fits depth 4 (sub-byte packed
     scanlines), so the SAME oracle verifies both layouts."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 11)
+        h = 1 + (did % 6)
+        p = 2 + (did % 15)
+        idx = (tb[np.arange(w * h) % len(tb)] % p).astype(np.uint8)
+        yield (encode_palette_png(idx.reshape(h, w), _fixture_palette(p), depth=depth),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                w = 1 + (len(tb) % 11)
-                h = 1 + (int(did) % 6)
-                p = 2 + (int(did) % 15)
-                k = np.arange(p, dtype=np.int64)
-                pal = np.stack(
-                    [(37 * k + 11) % 256, (59 * k + 23) % 256, (83 * k + 5) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                idx = (tb[np.arange(w * h) % len(tb)] % p).astype(np.uint8)
-                payloads.append(
-                    encode_palette_png(idx.reshape(h, w), pal, depth=depth)
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 PALETTE_PNG_STATS_SCHEMA = T.StructType(
@@ -3198,32 +2998,16 @@ def png_palette_stats(
     (:func:`decode_png_palette`): exact BIGINTs through the PLTE
     lookup — an index-mapping bug on either side breaks every channel.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_png_palette(payload)
+        yield (
+            int(d["width"]),
+            int(d["height"]),
+            int(d["palette_size"]),
+            *_channel_sums(d["pixels"]),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in (
-                    "doc_id", "width", "height", "palette_size",
-                    "sum_r", "sum_g", "sum_b",
-                )
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_png_palette(bytes(payload))
-                px = d["pixels"].reshape(-1, 3).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["palette_size"].append(int(d["palette_size"]))
-                out["sum_r"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_b"].append(int(px[:, 2].sum()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, PALETTE_PNG_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, PALETTE_PNG_STATS_SCHEMA)
 
 
 PALETTE_DEPTH_PNG_STATS_SCHEMA = T.StructType(
@@ -3248,27 +3032,17 @@ def png_palette_depth_stats(
     bit order, pad bits leaking into the row) scrambles indices and
     breaks every channel sum while the container still parses.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_png_palette(payload)
+        yield (
+            int(d["width"]),
+            int(d["height"]),
+            int(d["bit_depth"]),
+            int(d["palette_size"]),
+            *_channel_sums(d["pixels"]),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in PALETTE_DEPTH_PNG_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_png_palette(bytes(payload))
-                px = d["pixels"].reshape(-1, 3).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["bit_depth"].append(int(d["bit_depth"]))
-                out["palette_size"].append(int(d["palette_size"]))
-                out["sum_r"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_b"].append(int(px[:, 2].sum()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, PALETTE_DEPTH_PNG_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, PALETTE_DEPTH_PNG_STATS_SCHEMA)
 
 
 def encode_text_palette_trns_png(
@@ -3283,41 +3057,17 @@ def encode_text_palette_trns_png(
     than the palette whenever p > 1+gcd-range — the spec's prefix
     semantics, so the opaque-255 tail path is exercised), alpha entry
     k = (101k + 7) mod 256."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 11)
+        h = 1 + (did % 6)
+        p = 2 + (did % 15)
+        t = 1 + (did % p)
+        trns = ((101 * np.arange(t, dtype=np.int64) + 7) % 256).astype(np.uint8)
+        idx = (tb[np.arange(w * h) % len(tb)] % p).astype(np.uint8)
+        yield (encode_palette_png(idx.reshape(h, w), _fixture_palette(p), trns),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                did = int(did)
-                w = 1 + (len(tb) % 11)
-                h = 1 + (did % 6)
-                p = 2 + (did % 15)
-                k = np.arange(p, dtype=np.int64)
-                pal = np.stack(
-                    [(37 * k + 11) % 256, (59 * k + 23) % 256, (83 * k + 5) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                t = 1 + (did % p)
-                trns = ((101 * np.arange(t, dtype=np.int64) + 7) % 256).astype(
-                    np.uint8
-                )
-                idx = (tb[np.arange(w * h) % len(tb)] % p).astype(np.uint8)
-                payloads.append(encode_palette_png(idx.reshape(h, w), pal, trns))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 PALETTE_TRNS_PNG_STATS_SCHEMA = T.StructType(
@@ -3344,28 +3094,18 @@ def png_palette_alpha_stats(
     for uncovered entries, off-by-one on the covered range) breaks
     sum_a while leaving RGB intact.  Arrow-batched mapInPandas
     projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_png_palette(payload)
+        yield (
+            int(d["width"]),
+            int(d["height"]),
+            int(d["palette_size"]),
+            int(d["trns_size"]),
+            *_channel_sums(d["pixels"]),
+            int(d["alpha"].astype(np.int64).sum()),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in PALETTE_TRNS_PNG_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_png_palette(bytes(payload))
-                px = d["pixels"].reshape(-1, 3).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["palette_size"].append(int(d["palette_size"]))
-                out["trns_size"].append(int(d["trns_size"]))
-                out["sum_r"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_b"].append(int(px[:, 2].sum()))
-                out["sum_a"].append(int(d["alpha"].astype(np.int64).sum()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, PALETTE_TRNS_PNG_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, PALETTE_TRNS_PNG_STATS_SCHEMA)
 
 
 def encode_text_png(
@@ -3377,30 +3117,14 @@ def encode_text_png(
     h = 1 + id mod 10, pixel i (row-major) = text byte (i mod L).
     ``interlace=True`` writes Adam7 streams — same pixels, different
     wire layout, so the SAME oracle verifies the interlaced decode."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 24)
+        h = 1 + (did % 10)
+        px = tb[np.arange(w * h) % len(tb)].reshape(h, w)
+        yield (encode_gray_png(px, interlace=interlace),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                w = 1 + (len(tb) % 24)
-                h = 1 + (int(did) % 10)
-                px = tb[np.arange(w * h) % len(tb)].reshape(h, w)
-                payloads.append(encode_gray_png(px, interlace=interlace))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 def png_gray_stats(
@@ -3409,31 +3133,10 @@ def png_gray_stats(
     """Pixel stats from REAL PNG-decoded pixels (:func:`decode_png_gray`:
     CRC walk → inflate → filter reconstruction): same output shape and
     rounding discipline as :func:`jpeg_gray_stats`."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        yield _gray_stats(decode_png_gray(payload))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in ("doc_id", "width", "height", "mean_gray", "min_gray", "max_gray")
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_png_gray(bytes(payload))
-                px = d["pixels"]
-                mean = float(int(px.sum(dtype=np.int64))) / px.size
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["mean_gray"].append(
-                    float(Decimal(mean).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-                )
-                out["min_gray"].append(int(px.min()))
-                out["max_gray"].append(int(px.max()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, JPEG_GRAY_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, JPEG_GRAY_STATS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3535,36 +3238,18 @@ def encode_text_mjpeg(
     :func:`encode_text_jpeg`) whose block b carries text byte
     (b + frame_idx) mod L — a frame-shifted pattern, so every frame's
     stats differ and the SQL oracle can predict each one exactly."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        wb = 1 + (len(tb) % 4)
+        hb = 1 + (did % 3)
+        frames = []
+        for fidx in range(1 + did % 4):
+            vals = tb[(np.arange(wb * hb) + fidx) % len(tb)].reshape(hb, wb)
+            px = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
+            frames.append(encode_gray_jpeg(px))
+        yield (encode_mjpeg_avi(frames, width=8 * wb, height=8 * hb),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                wb = 1 + (len(tb) % 4)
-                hb = 1 + (int(did) % 3)
-                frames = []
-                for fidx in range(1 + int(did) % 4):
-                    vals = tb[(np.arange(wb * hb) + fidx) % len(tb)].reshape(hb, wb)
-                    px = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-                    frames.append(encode_gray_jpeg(px))
-                payloads.append(
-                    encode_mjpeg_avi(frames, width=8 * wb, height=8 * hb)
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 MJPEG_FRAME_STATS_SCHEMA = T.StructType(
@@ -3593,30 +3278,12 @@ def mjpeg_frame_stats(
     frame-sample / feature-extract chain the multimodal north-star
     describes, with zero fakes left.  Arrow-batched mapInPandas, no
     shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        for fidx, fbytes in enumerate(decode_mjpeg_avi(payload)):
+            w, h, mean, _, _ = _gray_stats(decode_jpeg_gray(fbytes))
+            yield fidx, int(fidx * every_ms), w, h, mean
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in
-                   ("doc_id", "frame_idx", "ts_ms", "width", "height", "mean_gray")}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                for fidx, fbytes in enumerate(decode_mjpeg_avi(bytes(payload))):
-                    d = decode_jpeg_gray(fbytes)
-                    px = d["pixels"]
-                    mean = float(int(px.sum(dtype=np.int64))) / px.size
-                    out["doc_id"].append(int(did))
-                    out["frame_idx"].append(int(fidx))
-                    out["ts_ms"].append(int(fidx * every_ms))
-                    out["width"].append(int(d["width"]))
-                    out["height"].append(int(d["height"]))
-                    out["mean_gray"].append(
-                        float(Decimal(mean).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-                    )
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, MJPEG_FRAME_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, MJPEG_FRAME_STATS_SCHEMA)
 
 
 def sample_frames(
@@ -3645,29 +3312,20 @@ def sample_frames(
             T.StructField("frame_payload", T.BinaryType(), True),
         ]
     )
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"doc_id": [], "frame_idx": [], "ts_ms": [], "frame_payload": []}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                payload = bytes(payload)
-                # route on the RIFF FORM TYPE, not just the RIFF magic —
-                # a RIFF/WAVE payload belongs to the raw windower, not
-                # the AVI frame walk (which would raise on it)
-                if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-                    frames = decode_mjpeg_avi(payload)
-                else:
-                    n_frames = 1 + (len(payload) % 5)
-                    frames = [payload[i : i + 16] for i in range(n_frames)]
-                for i, fp in enumerate(frames):
-                    rows["doc_id"].append(int(did))
-                    rows["frame_idx"].append(i)
-                    rows["ts_ms"].append(i * every_ms)
-                    rows["frame_payload"].append(fp)
-            yield pd.DataFrame(rows)
+    def row(did, payload):
+        # route on the RIFF FORM TYPE, not just the RIFF magic — a
+        # RIFF/WAVE payload belongs to the raw windower, not the AVI
+        # frame walk (which would raise on it)
+        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
+            frames = decode_mjpeg_avi(payload)
+        else:
+            n_frames = 1 + (len(payload) % 5)
+            frames = [payload[i : i + 16] for i in range(n_frames)]
+        for i, fp in enumerate(frames):
+            yield i, i * every_ms, fp
 
-    return cols.mapInPandas(batches, out_schema)
+    return _row_map(df, id_col, payload_col, row, out_schema)
 
 
 def downsample_images_2x(
@@ -3679,31 +3337,21 @@ def downsample_images_2x(
     (doc_id, payload, width, height) carries the REAL new dims read
     back from the re-encoded file.  The thumbnail/mipmap primitive of
     a media pipeline; chain k times for 2^k pyramids."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_bmp(payload)
+        if d.get("n_channels", 3) != 3:
+            raise ValueError("thumbnail path expects 24-bpp BMP")
+        small = box_downsample_2x(d["pixels"].reshape(d["height"], d["width"], 3))
+        yield encode_bmp(small), int(small.shape[1]), int(small.shape[0])
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"doc_id": [], "payload": [], "width": [], "height": []}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_bmp(bytes(payload))
-                if d.get("n_channels", 3) != 3:
-                    raise ValueError("thumbnail path expects 24-bpp BMP")
-                px = d["pixels"].reshape(d["height"], d["width"], 3)
-                small = box_downsample_2x(px)
-                out["doc_id"].append(int(did))
-                out["payload"].append(encode_bmp(small))
-                out["height"].append(int(small.shape[0]))
-                out["width"].append(int(small.shape[1]))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(
-        batches,
+    return _row_map(
+        df,
+        id_col,
+        payload_col,
+        row,
         T.StructType(
             [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
+                *_PAYLOAD_SCHEMA.fields,
                 T.StructField("width", T.IntegerType(), False),
                 T.StructField("height", T.IntegerType(), False),
             ]
@@ -3721,37 +3369,21 @@ def encode_text_pcm(
     meaningful.  The payload is the raw sample buffer (the audio twin
     of `encode_text_bmp`): the fixture-side half of a real decode path
     whose features a SQL oracle can compute straight from the text."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for text in pdf["__text"]:
-                tb = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                if tb.size and int(tb.max()) >= 128:
-                    # (byte-80)*256 overflows int16 from byte 208 up, and
-                    # multibyte UTF-8 diverges from the oracle's per-code-
-                    # point recompute — raise, mirroring the odd-length
-                    # check in pcm_energy_stats, instead of silent wrap
-                    raise ValueError(
-                        "encode_text_pcm requires ASCII text "
-                        f"(found byte {int(tb.max())})"
-                    )
-                samples = (tb.astype(np.int32) - 80) * 256
-                payloads.append(samples.astype("<i2").tobytes())
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
+    def row(did, text):
+        tb = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+        if tb.size and int(tb.max()) >= 128:
+            # (byte-80)*256 overflows int16 from byte 208 up, and
+            # multibyte UTF-8 diverges from the oracle's per-code-
+            # point recompute — raise, mirroring the odd-length
+            # check in pcm_energy_stats, instead of silent wrap
+            raise ValueError(
+                "encode_text_pcm requires ASCII text "
+                f"(found byte {int(tb.max())})"
             )
+        samples = (tb.astype(np.int32) - 80) * 256
+        yield (samples.astype("<i2").tobytes(),)
 
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 def encode_wav(samples: np.ndarray, *, sample_rate: int = 8000) -> bytes:
@@ -3859,28 +3491,11 @@ def encode_text_wav(
     """Render each document as a REAL WAV file (the :func:`encode_text_pcm`
     waveform — sample i = (byte i - 80)·256 — inside a genuine RIFF/WAVE
     container)."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        samples = (_ascii_text_bytes(text, did).astype(np.int32) - 80) * 256
+        yield (encode_wav(samples),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                samples = (tb.astype(np.int32) - 80) * 256
-                payloads.append(encode_wav(samples))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 def encode_text_stereo_wav(
@@ -3891,30 +3506,14 @@ def encode_text_stereo_wav(
     channel sample i = (byte (2i mod L) − 80)·256 — different
     derivations per channel, so any interleave/de-interleave mixup
     breaks exactly one channel's oracle."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        n = len(tb)
+        left = (tb.astype(np.int32) - 80) * 256
+        right = (tb[(2 * np.arange(n)) % n].astype(np.int32) - 80) * 256
+        yield (encode_wav(np.stack([left, right], axis=1)),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                n = len(tb)
-                left = (tb.astype(np.int32) - 80) * 256
-                right = (tb[(2 * np.arange(n)) % n].astype(np.int32) - 80) * 256
-                payloads.append(encode_wav(np.stack([left, right], axis=1)))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 STEREO_WAV_STATS_SCHEMA = T.StructType(
@@ -3937,34 +3536,21 @@ def stereo_wav_stats(
     (:func:`decode_wav` de-interleaves): integer energy and peak per
     channel — exact oracle, a channel-order bug flips the columns.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_wav(payload)
+        if d["n_channels"] != 2:
+            raise ValueError("stereo_wav_stats needs a 2-channel WAV")
+        ch = d["samples"].astype(np.int64)
+        yield (
+            int(d["sample_rate"]),
+            int(ch.shape[0]),
+            int((ch[:, 0] ** 2).sum()),
+            int((ch[:, 1] ** 2).sum()),
+            int(np.abs(ch[:, 0]).max(initial=0)),
+            int(np.abs(ch[:, 1]).max(initial=0)),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in (
-                    "doc_id", "sample_rate", "n_frames",
-                    "energy_l", "energy_r", "peak_l", "peak_r",
-                )
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_wav(bytes(payload))
-                if d["n_channels"] != 2:
-                    raise ValueError("stereo_wav_stats needs a 2-channel WAV")
-                ch = d["samples"].astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["sample_rate"].append(int(d["sample_rate"]))
-                out["n_frames"].append(int(ch.shape[0]))
-                out["energy_l"].append(int((ch[:, 0] ** 2).sum()))
-                out["energy_r"].append(int((ch[:, 1] ** 2).sum()))
-                out["peak_l"].append(int(np.abs(ch[:, 0]).max(initial=0)))
-                out["peak_r"].append(int(np.abs(ch[:, 1]).max(initial=0)))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, STEREO_WAV_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, STEREO_WAV_STATS_SCHEMA)
 
 
 def encode_text_quad_wav(
@@ -3974,33 +3560,16 @@ def encode_text_quad_wav(
     sample i = (byte ((c+1)·i + c) mod L − 80)·256 — four DISTINCT
     stride derivations, so any interleave/de-interleave/channel-order
     bug breaks specific channels' oracles rather than averaging out."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        n = len(tb)
+        i = np.arange(n)
+        chans = [
+            (tb[((c + 1) * i + c) % n].astype(np.int32) - 80) * 256 for c in range(4)
+        ]
+        yield (encode_wav(np.stack(chans, axis=1)),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                n = len(tb)
-                i = np.arange(n)
-                chans = [
-                    (tb[((c + 1) * i + c) % n].astype(np.int32) - 80) * 256
-                    for c in range(4)
-                ]
-                payloads.append(encode_wav(np.stack(chans, axis=1)))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 MULTI_WAV_STATS_SCHEMA = T.StructType(
@@ -4022,37 +3591,18 @@ def multichannel_wav_stats(
     frames (:func:`decode_wav` de-interleaves ANY channel count):
     integer energy and peak arrays in channel order — exact oracle.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_wav(payload)
+        ch = d["samples"].astype(np.int64).reshape(-1, d["n_channels"])
+        yield (
+            int(d["sample_rate"]),
+            int(d["n_channels"]),
+            int(ch.shape[0]),
+            [int(v) for v in (ch**2).sum(axis=0)],
+            [int(v) for v in np.abs(ch).max(axis=0, initial=0)],
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in (
-                    "doc_id", "sample_rate", "n_channels",
-                    "n_frames", "energies", "peaks",
-                )
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_wav(bytes(payload))
-                ch = d["samples"].astype(np.int64)
-                if d["n_channels"] == 1:
-                    ch = ch.reshape(-1, 1)
-                out["doc_id"].append(int(did))
-                out["sample_rate"].append(int(d["sample_rate"]))
-                out["n_channels"].append(int(d["n_channels"]))
-                out["n_frames"].append(int(ch.shape[0]))
-                out["energies"].append(
-                    [int(v) for v in (ch ** 2).sum(axis=0)]
-                )
-                out["peaks"].append(
-                    [int(v) for v in np.abs(ch).max(axis=0, initial=0)]
-                )
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, MULTI_WAV_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, MULTI_WAV_STATS_SCHEMA)
 
 
 WAV_STATS_SCHEMA = T.StructType(
@@ -4075,35 +3625,18 @@ def wav_stats(
     sample rate and integer-floor duration from the container, energy
     and peak from the samples — all-integer outputs, exact oracle.
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_wav(payload)
+        s = d["samples"].astype(np.int64)
+        yield (
+            int(d["sample_rate"]),
+            int(s.size * 1000 // d["sample_rate"]),
+            int(s.size),
+            int((s * s).sum()),
+            int(np.abs(s).max()) if s.size else 0,
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in (
-                    "doc_id",
-                    "sample_rate",
-                    "duration_ms",
-                    "n_samples",
-                    "total_energy",
-                    "peak",
-                )
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_wav(bytes(payload))
-                s = d["samples"].astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["sample_rate"].append(int(d["sample_rate"]))
-                out["duration_ms"].append(int(s.size * 1000 // d["sample_rate"]))
-                out["n_samples"].append(int(s.size))
-                out["total_energy"].append(int((s * s).sum()))
-                out["peak"].append(int(np.abs(s).max()) if s.size else 0)
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, WAV_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, WAV_STATS_SCHEMA)
 
 
 def pcm_energy_stats(
@@ -4119,39 +3652,23 @@ def pcm_energy_stats(
     float discipline needed.  Scale shape: Arrow-batched mapInPandas
     projection, no shuffle; a malformed (odd-length) payload raises
     rather than silently truncating."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload"))
+    def row(did, payload):
+        if len(payload) % 2:
+            raise ValueError(f"odd PCM payload length {len(payload)} for doc {did}")
+        s = np.frombuffer(payload, dtype="<i2").astype(np.int64)
+        neg = s < 0
+        yield (
+            int(s.size),
+            int(np.sum(s * s)),
+            int(np.count_nonzero(neg[:-1] != neg[1:])) if s.size > 1 else 0,
+            int(np.max(np.abs(s))) if s.size else 0,
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                k: []
-                for k in ("doc_id", "n_samples", "total_energy", "n_zero_cross", "peak")
-            }
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                b = bytes(payload)
-                if len(b) % 2:
-                    raise ValueError(f"odd PCM payload length {len(b)} for doc {did}")
-                s = np.frombuffer(b, dtype="<i2").astype(np.int64)
-                neg = s < 0
-                out["doc_id"].append(int(did))
-                out["n_samples"].append(int(s.size))
-                out["total_energy"].append(int(np.sum(s * s)))
-                out["n_zero_cross"].append(
-                    int(np.count_nonzero(neg[:-1] != neg[1:])) if s.size > 1 else 0
-                )
-                out["peak"].append(int(np.max(np.abs(s))) if s.size else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "n_samples": pd.Series(out["n_samples"], dtype="int64"),
-                    "total_energy": pd.Series(out["total_energy"], dtype="int64"),
-                    "n_zero_cross": pd.Series(out["n_zero_cross"], dtype="int64"),
-                    "peak": pd.Series(out["peak"], dtype="int64"),
-                }
-            )
-
-    return cols.mapInPandas(
-        batches,
+    return _row_map(
+        df,
+        id_col,
+        payload_col,
+        row,
         T.StructType(
             [
                 T.StructField("doc_id", T.LongType(), False),
@@ -4341,44 +3858,20 @@ def encode_text_animated_gif(
     content distinct but predictable), frame delay 4 + (id + f) mod 7
     centiseconds — so the oracle predicts every pixel of every frame
     AND every container delay."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 11)
+        h = 1 + (did % 6)
+        p = 2 + (did % 15)
+        nf = 1 + (did % 4)
+        frames = [
+            (tb[(np.arange(w * h) + f) % len(tb)] % p).astype(np.uint8).reshape(h, w)
+            for f in range(nf)
+        ]
+        delays = [4 + ((did + f) % 7) for f in range(nf)]
+        yield (encode_animated_gif(frames, _fixture_palette(p), delays),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                did = int(did)
-                w = 1 + (len(tb) % 11)
-                h = 1 + (did % 6)
-                p = 2 + (did % 15)
-                nf = 1 + (did % 4)
-                k = np.arange(p, dtype=np.int64)
-                pal = np.stack(
-                    [(37 * k + 11) % 256, (59 * k + 23) % 256, (83 * k + 5) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                frames = [
-                    (tb[(np.arange(w * h) + f) % len(tb)] % p)
-                    .astype(np.uint8)
-                    .reshape(h, w)
-                    for f in range(nf)
-                ]
-                delays = [4 + ((did + f) % 7) for f in range(nf)]
-                payloads.append(encode_animated_gif(frames, pal, delays))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 def animated_gif_frame_stats(
@@ -4389,32 +3882,20 @@ def animated_gif_frame_stats(
     row per frame, exact BIGINTs; a frame-boundary, delay-pairing, or
     LZW bug breaks specific rows.  Arrow-batched mapInPandas, no
     shuffle; output is O(frames), row-local."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_animated_gif(payload)
+        for f, (fr, delay) in enumerate(zip(d["frames"], d["delays_cs"])):
+            yield (
+                f,
+                int(d["n_frames"]),
+                int(d["width"]),
+                int(d["height"]),
+                int(d["palette_size"]),
+                int(delay),
+                *_channel_sums(fr),
+            )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in ANIMATED_GIF_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_animated_gif(bytes(payload))
-                for f, (fr, delay) in enumerate(
-                    zip(d["frames"], d["delays_cs"])
-                ):
-                    px = fr.reshape(-1, 3).astype(np.int64)
-                    out["doc_id"].append(int(did))
-                    out["frame_idx"].append(f)
-                    out["n_frames"].append(int(d["n_frames"]))
-                    out["width"].append(int(d["width"]))
-                    out["height"].append(int(d["height"]))
-                    out["palette_size"].append(int(d["palette_size"]))
-                    out["delay_cs"].append(int(delay))
-                    out["sum_r"].append(int(px[:, 0].sum()))
-                    out["sum_g"].append(int(px[:, 1].sum()))
-                    out["sum_b"].append(int(px[:, 2].sum()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, ANIMATED_GIF_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, ANIMATED_GIF_STATS_SCHEMA)
 
 
 def encode_float_wav(samples: np.ndarray, *, sample_rate: int = 8000) -> bytes:
@@ -4457,30 +3938,11 @@ def encode_text_float_wav(
     by a power of two, so every float32 sample is EXACT (numerators
     < 2¹⁷ are well inside the 24-bit mantissa) and the decode side can
     reconstruct the integer PCM value losslessly."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        pcm = (_ascii_text_bytes(text, did).astype(np.int32) - 80) * 256
+        yield (encode_float_wav((pcm / 32768.0).astype(np.float32)),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                pcm = (tb.astype(np.int32) - 80) * 256
-                payloads.append(
-                    encode_float_wav((pcm / 32768.0).astype(np.float32))
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 def float_wav_stats(
@@ -4493,29 +3955,20 @@ def float_wav_stats(
     order, wrong scale, truncated mantissa) breaks integer columns the
     oracle predicts from the text.  Arrow-batched mapInPandas, no
     shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_wav(payload)
+        if d["format_tag"] != 3 or d["n_channels"] != 1:
+            raise ValueError("expected mono float WAV")
+        s = np.rint(d["samples"].astype(np.float64) * 32768.0).astype(np.int64)
+        yield (
+            int(d["sample_rate"]),
+            int(d["format_tag"]),
+            int(s.size),
+            int((s * s).sum()),
+            int(np.abs(s).max(initial=0)),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in FLOAT_WAV_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_wav(bytes(payload))
-                if d["format_tag"] != 3 or d["n_channels"] != 1:
-                    raise ValueError("expected mono float WAV")
-                s = np.rint(
-                    d["samples"].astype(np.float64) * 32768.0
-                ).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["sample_rate"].append(int(d["sample_rate"]))
-                out["format_tag"].append(int(d["format_tag"]))
-                out["n_samples"].append(int(s.size))
-                out["total_energy"].append(int((s * s).sum()))
-                out["peak"].append(int(np.abs(s).max(initial=0)))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, FLOAT_WAV_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, FLOAT_WAV_STATS_SCHEMA)
 
 
 def encode_gray16_png(pixels: np.ndarray) -> bytes:
@@ -4610,32 +4063,14 @@ def encode_text_gray16_png(
     byte (i mod L) · 257 — the canonical 8→16-bit expansion (x·257
     = x·0x0101, full-range), so every 16-bit sample is predictable
     from the text and exceeds 8 bits whenever the byte does."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 11)
+        h = 1 + (did % 6)
+        px = (tb[np.arange(w * h) % len(tb)].astype(np.uint16) * 257).reshape(h, w)
+        yield (encode_gray16_png(px),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                w = 1 + (len(tb) % 11)
-                h = 1 + (int(did) % 6)
-                px = (
-                    tb[np.arange(w * h) % len(tb)].astype(np.uint16) * 257
-                ).reshape(h, w)
-                payloads.append(encode_gray16_png(px))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 def gray16_png_stats(
@@ -4647,25 +4082,18 @@ def gray16_png_stats(
     actually reached the output; a high/low byte swap or an 8-bit
     truncation zeroes it or breaks the sum).  Arrow-batched
     mapInPandas, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_png_gray16(payload)
+        px = d["pixels"]
+        yield (
+            int(d["width"]),
+            int(d["height"]),
+            int(px.sum()),
+            int(px.max(initial=0)),
+            int((px > 255).sum()),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in GRAY16_PNG_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_png_gray16(bytes(payload))
-                px = d["pixels"]
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["sum_px"].append(int(px.sum()))
-                out["max_px"].append(int(px.max(initial=0)))
-                out["n_high"].append(int((px > 255).sum()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, GRAY16_PNG_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, GRAY16_PNG_STATS_SCHEMA)
 
 
 def decode_pgm(payload: bytes) -> dict:
@@ -4719,31 +4147,15 @@ def encode_text_pgm(
     stride-3 cyclic sample, distinct from both the BMP (stride 1) and
     PPM (stride 2) fixtures so the three netpbm-family decoders can't
     share a bug."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 7)
+        h = 1 + (did % 8)
+        idx = (np.arange(w * h) * 3) % len(tb)
+        header = f"P5\n# doc {did}\n{w} {h}\n255\n".encode()
+        yield (header + tb[idx].tobytes(),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                w = 1 + (len(tb) % 7)
-                h = 1 + (int(did) % 8)
-                idx = (np.arange(w * h) * 3) % len(tb)
-                header = f"P5\n# doc {int(did)}\n{w} {h}\n255\n".encode()
-                payloads.append(header + tb[idx].tobytes())
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 def pgm_stats(
@@ -4751,25 +4163,12 @@ def pgm_stats(
 ) -> DataFrame:
     """Exact integer stats (sum/min/max) from REAL P5 decoding —
     Arrow-batched mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_pgm(payload)
+        px = d["pixels"].astype(np.int64)
+        yield int(d["width"]), int(d["height"]), int(px.sum()), int(px.min()), int(px.max())
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in PGM_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_pgm(bytes(payload))
-                px = d["pixels"].astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["sum_px"].append(int(px.sum()))
-                out["min_px"].append(int(px.min()))
-                out["max_px"].append(int(px.max()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, PGM_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, PGM_STATS_SCHEMA)
 
 
 def encode_bmp32(pixels_topdown_bgra: np.ndarray) -> bytes:
@@ -4811,31 +4210,14 @@ def encode_text_bmp32(
     (4·i + c) mod L — a stride that makes all FOUR channels distinct
     functions of the text, so a channel mixup or an alpha drop breaks
     a specific predicted sum."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 5)
+        h = 1 + (did % 7)
+        px = tb[np.arange(w * h * 4) % len(tb)].reshape(h, w, 4)
+        yield (encode_bmp32(px),)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                w = 1 + (len(tb) % 5)
-                h = 1 + (int(did) % 7)
-                idx = np.arange(w * h * 4) % len(tb)
-                px = tb[idx].reshape(h, w, 4)
-                payloads.append(encode_bmp32(px))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 def bmp32_stats(
@@ -4845,29 +4227,18 @@ def bmp32_stats(
     32-bpp BMP decoding (alpha is the 4th channel; n_opaque counts
     a == 255 — the mask-extraction primitive).  Arrow-batched
     mapInPandas, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_bmp(payload)
+        if d.get("n_channels") != 4:
+            raise ValueError("bmp32_stats expects 32-bpp BMP")
+        yield (
+            int(d["width"]),
+            int(d["height"]),
+            *_channel_sums(d["pixels"], 4),  # B, G, R, A
+            int((d["pixels"][3::4] == 255).sum()),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in BMP32_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_bmp(bytes(payload))
-                if d.get("n_channels") != 4:
-                    raise ValueError("bmp32_stats expects 32-bpp BMP")
-                px = d["pixels"].reshape(-1, 4).astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["sum_b"].append(int(px[:, 0].sum()))
-                out["sum_g"].append(int(px[:, 1].sum()))
-                out["sum_r"].append(int(px[:, 2].sum()))
-                out["sum_a"].append(int(px[:, 3].sum()))
-                out["n_opaque"].append(int((px[:, 3] == 255).sum()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, BMP32_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, BMP32_STATS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -5295,40 +4666,22 @@ def encode_text_tiff(
     most fixtures are MULTI-strip and the offset arrays are real),
     byte order alternating by id parity (even → II, odd → MM — both
     wire orders decode through one walk)."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+    def row(did, text):
+        tb = _ascii_text_bytes(text, did)
+        w = 1 + (len(tb) % 9)
+        h = 1 + (did % 7)
+        px = tb[(np.arange(w * h) * 5) % len(tb)].reshape(h, w)
+        yield (
+            encode_gray_tiff(
+                px,
+                rows_per_strip=3,
+                big_endian=bool(did % 2),
+                packbits=packbits,
+                lzw=lzw,
+            ),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["__text"]):
-                tb = _ascii_text_bytes(text, did)
-                did = int(did)
-                w = 1 + (len(tb) % 9)
-                h = 1 + (did % 7)
-                idx = (np.arange(w * h) * 5) % len(tb)
-                px = tb[idx].reshape(h, w)
-                payloads.append(
-                    encode_gray_tiff(
-                        px,
-                        rows_per_strip=3,
-                        big_endian=bool(did % 2),
-                        packbits=packbits,
-                        lzw=lzw,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return cols.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        ),
-    )
+    return _row_map(df, id_col, text_col, row, _PAYLOAD_SCHEMA)
 
 
 def tiff_gray_stats(
@@ -5337,23 +4690,16 @@ def tiff_gray_stats(
     """Exact integer stats (sum/min/max + the strip count the IFD
     truthfully reports) from REAL TIFF decoding — Arrow-batched
     mapInPandas projection, no shuffle."""
-    cols = df.select(
-        F.col(id_col).alias("doc_id"), F.col(payload_col).alias("__payload")
-    )
+    def row(did, payload):
+        d = decode_gray_tiff(payload)
+        px = d["pixels"].astype(np.int64)
+        yield (
+            int(d["width"]),
+            int(d["height"]),
+            int(d["n_strips"]),
+            int(px.sum()),
+            int(px.min()),
+            int(px.max()),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k.name: [] for k in TIFF_GRAY_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf["doc_id"], pdf["__payload"]):
-                d = decode_gray_tiff(bytes(payload))
-                px = d["pixels"].astype(np.int64)
-                out["doc_id"].append(int(did))
-                out["width"].append(int(d["width"]))
-                out["height"].append(int(d["height"]))
-                out["n_strips"].append(int(d["n_strips"]))
-                out["sum_px"].append(int(px.sum()))
-                out["min_px"].append(int(px.min()))
-                out["max_px"].append(int(px.max()))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, TIFF_GRAY_STATS_SCHEMA)
+    return _row_map(df, id_col, payload_col, row, TIFF_GRAY_STATS_SCHEMA)

@@ -478,6 +478,77 @@ def test_sessionize_capped_guards(spark):
         sessionize_capped(df, max_events_per_user=0)
 
 
+
+def _sessionize_reference(pdf, gap_s: int, max_s: int) -> set:
+    """Per-user pandas replay of sessionize_capped's recurrence; a null
+    user_id is one user (groupby with dropna=False, as DuckDB's
+    PARTITION BY groups nulls)."""
+    import pandas as pd
+
+    out = set()
+    for uid, g in pdf.groupby("user_id", dropna=False, sort=False):
+        ts = g.sort_values(["ts", "event_id"])["ts"].tolist()
+        sid, start, prev, n = -1, None, None, 0
+        for t in ts:
+            if (
+                prev is None
+                or (t - prev).total_seconds() >= gap_s
+                or (t - start).total_seconds() > max_s
+            ):
+                if prev is not None:
+                    out.add((uid, sid, start, prev, n))
+                sid, start, n = sid + 1, t, 0
+            n, prev = n + 1, t
+        out.add((uid, sid, start, prev, n))
+    return {(None if pd.isna(u) else int(u), *rest) for u, *rest in out}
+
+
+def test_sessionize_capped_null_user_is_one_key_across_batches(spark):
+    """Null user ids fold as ONE user (DuckDB PARTITION BY semantics),
+    also when the null run and a user's run span Arrow batch
+    boundaries: with maxRecordsPerBatch=3 every group of four or more
+    events is split across batches, so both the carry of the batch's
+    last user and the per-batch boundary split must treat null as equal
+    to null — NaN compares unequal to itself, so a plain comparison
+    makes every anonymous event its own session."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from duckdb_graphar_spark.operators.events import sessionize_capped
+
+    base = dt.datetime(2024, 1, 1)
+    m = lambda x: base + dt.timedelta(minutes=x)  # noqa: E731
+    minutes = {
+        None: [0, 5, 10, 15, 20, 90, 95],  # gap break after 20
+        1: [0, 10, 20, 30, 40, 50, 60, 70],  # duration cap splits at 70
+        2: [3, 200],
+        3: [1, 2, 3, 4, 5],
+    }
+    rows, eid = [], 0
+    for uid, ms in minutes.items():
+        for x in ms:
+            rows.append((uid, m(x), eid))
+            eid += 1
+    df = spark.createDataFrame(rows, "user_id long, ts timestamp_ntz, event_id long")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = {
+            tuple(r)
+            for r in sessionize_capped(
+                df, gap_seconds=1800, max_duration_seconds=3600
+            ).collect()
+        }
+    finally:
+        spark.conf.set(key, prev)
+    ref = pd.DataFrame(rows, columns=["user_id", "ts", "event_id"])
+    want = _sessionize_reference(ref, 1800, 3600)
+    assert got == want
+    assert sum(1 for r in got if r[0] is None) == 2  # anonymous: 2 sessions
+
+
 def test_attribution_segmented_equals_single_window(spark):
     """The (user, segment) boundary stitch is BIT-IDENTICAL to the
     single-window plan: a content-addressed event log spanning many

@@ -287,6 +287,40 @@ def test_python_datasource_vertex_point_lookup(spark, graph_fixture):
     assert len(rows) == 1 and rows[0].name == "p1234" and rows[0].hash_phone_no == 1234
 
 
+
+def test_point_lookup_on_vertex_without_edges_is_empty(spark, tmp_path):
+    """A pushed src (CSR) or dst (CSC) equality on a vertex with no
+    edges on that side plans no partition; PySpark then calls
+    ``read(None)`` once, which must be an empty scan — for the data
+    source and the reader alike."""
+    from duckdb_graphar_spark.graphar.datasource import register
+    from duckdb_graphar_spark.graphar.writer import EdgeSpec, VertexSpec, write_graph
+    import pyspark.sql.functions as F
+
+    # vertex 3 has no out-edges, vertex 0 no in-edges
+    y = write_graph(
+        str(tmp_path), "Sparse",
+        {"Person": VertexSpec(table=pa.table({"name": ["a", "b", "c", "d"]}))},
+        {("Person", "knows", "Person"): EdgeSpec(
+            src=np.array([0, 0, 1, 2]), dst=np.array([1, 2, 3, 3])
+        )},
+    )
+    register(spark)
+    e = (
+        spark.read.format("graphar")
+        .option("path", y)
+        .option("src", "Person").option("edge", "knows").option("dst", "Person")
+        .load()
+    )
+    assert e.filter(F.col("_graphArSrcIndex") == 3).count() == 0
+    assert e.filter(F.col("_graphArDstIndex") == 0).collect() == []
+    assert e.filter(F.col("_graphArSrcIndex") == 0).count() == 2
+    r = graphar.read_edges(spark, y, "Person", "knows", "Person", src_vid=3)
+    assert r.count() == 0
+    r = graphar.read_edges(spark, y, "Person", "knows", "Person", dst_vid=0)
+    assert r.count() == 0
+
+
 def test_uri_addressed_graph(spark, graph_fixture):
     """A5 parity: graph metadata + data addressable by URI (file:// here;
     s3:///gs:// resolve through the same pyarrow.fs path,

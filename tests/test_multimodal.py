@@ -2136,3 +2136,99 @@ def test_color_jpeg_restart_markers_roundtrip():
         encode_color_jpeg_progressive(px, restart_interval=-1)
     with _pt.raises(ValueError, match="restart_interval"):
         encode_color_jpeg(px, restart_interval=70000)
+
+
+# ---------------------------------------------------------------------------
+# payload byte identity: every text encoder (and the thumbnail map) pinned
+# to SHA-256 digests of its output on one fixed documents frame — the
+# stats oracles decode payloads, so they cannot see a changed byte that
+# still decodes to the same pixels/samples
+# ---------------------------------------------------------------------------
+
+_DIGEST_TEXT = "the quick brown fox jumps over the lazy dog 0123456789 ,.;!?"
+
+
+def _digest_docs(spark):
+    """28 ASCII documents: ids cover every encoder's id-mod geometry plus
+    two large ids; text lengths 1..47 cover every length-mod width."""
+    ids = list(range(26)) + [10**9 + 1, 2**40 + 5]
+    pool = _DIGEST_TEXT * 3
+    rows = []
+    for i, did in enumerate(ids):
+        start = (i * 7) % len(_DIGEST_TEXT)
+        rows.append((did, pool[start : start + 1 + (i * 13) % 47]))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _rows_digest(df) -> str:
+    import hashlib
+    import struct
+
+    h = hashlib.sha256()
+    for r in sorted(df.select("doc_id", "payload").collect()):
+        p = bytes(r.payload)
+        h.update(struct.pack("<qI", r.doc_id, len(p)) + p)
+    return h.hexdigest()
+
+
+def _encoded(spark, name, kwargs):
+    if name == "downsample_images_2x":
+        return M.downsample_images_2x(M.encode_text_bmp(_digest_docs(spark)))
+    return getattr(M, name)(_digest_docs(spark), **kwargs)
+
+
+# recorded from the hand-written per-wrapper mapInPandas closures at commit
+# 377707a, before the wrappers moved onto the shared `_row_map` helper
+_PAYLOAD_DIGESTS = [
+    ("encode_text_bmp", {}, "e408acbf461dcd7165b648796669ca0acf5778e3e62b33754ad12febf79cf2e2"),
+    ("encode_text_ppm", {}, "892ca5d3a2ed72d007307a8154464f340e44f0e506884a908746e81eddd7519c"),
+    ("encode_text_jpeg", {}, "1355bbe0cecfe7211c7ff83e7e5acfbf5014007d3e17cc1b42b00179c9a9137e"),
+    ("encode_text_jpeg", {"quant16": True}, "19ecd81d894ecad6350fc981300d7a29207944024cd28112cc7f1319b49cddc5"),
+    ("encode_text_jpeg", {"restart_interval": 2}, "0e4ccda265d7bca51fd0285a6edd2b5c51ff59c66ae580e4bc64f1acfb93bb35"),
+    ("encode_text_jpeg", {"progressive": True}, "35796000130c108d475b52f895dd71d886ebaa35aa73f59ec413a07c52f4cb18"),
+    ("encode_text_jpeg", {"progressive": True, "restart_interval": 1}, "8519e5b88b58641757910a11b0d5099444d23782326b224e536eff524e183248"),
+    ("encode_text_rgb_png", {}, "fcf55c051afbab87820ea2d6aced352833d7ea0071897cbdd7c4efcfc57e43db"),
+    ("encode_text_color_jpeg", {}, "e1ff8b768751b68f4767c1912698fc162fb92ffd301812bc31582d8da70e2942"),
+    ("encode_text_color_jpeg", {"progressive": True}, "292e35be003ab620c0c2ab9c762619f80ef52d6eb90d8c082bd75e281d252190"),
+    ("encode_text_gif", {}, "dd492c3329c03c4e461e24cc353b01e6f36a7f3a04bb5c29b890096c7047ff10"),
+    ("encode_text_local_gif", {}, "00d69e01582589e1a00cdac6531e287be47cd8613eaeaad5e8e9b995a22e030d"),
+    ("encode_text_palette_png", {}, "2623226e22539d7f1d629e33bcdab685bbfc719ff0bd81f631fe8dda35ee14eb"),
+    ("encode_text_palette_png", {"depth": 4}, "cdf124b3de87bede369f251939d6de85b8f413e2a92ad455eda40dbcdb2b5505"),
+    ("encode_text_palette_trns_png", {}, "b334c4f9d3da3b0ed009bdf1a6287d262e23bcdbf73fc2988fb17a5d17024eeb"),
+    ("encode_text_png", {}, "5a65bd263d6cd0958f0eb8ed65508b21a55587a90104ea30494076a4de3a02f4"),
+    ("encode_text_png", {"interlace": True}, "9722ba1a9846b0784c93135a2dadf7df867d657e542d4bde60b0be02c023747f"),
+    ("encode_text_mjpeg", {}, "d113c74e42e90fbc5740fba96ed01474c96fb63dd64f680501c40f18a7c24989"),
+    ("encode_text_pcm", {}, "f5dab5ffa3d6a5f6294d2bb4afc656c9a668969d647bb2ada3e3fb140b86da89"),
+    ("encode_text_wav", {}, "8f42fd460bfbd032e1cbbe21d4296bac6bd3a0ff6f8ec4942e64583a8c39dc02"),
+    ("encode_text_stereo_wav", {}, "993f0aa74b02ff0f9b5f4423aabc5f155e68e164b826d869204b69cd16002dea"),
+    ("encode_text_quad_wav", {}, "bbdb6eabd8b166bb22561f12638545dde1d708c1f59818e432ae988fea44f86e"),
+    ("encode_text_animated_gif", {}, "b199634693d0f2ad8cf47d5dc9edefa89b686a415bffcd9ab16730c954657a47"),
+    ("encode_text_float_wav", {}, "781522a475a7ee5247c79f4d540d8a6dd453ef310237dc01616b79e1d4a31a58"),
+    ("encode_text_gray16_png", {}, "fd803994c4a302d7d7a65ba6e8e1df66071c36f365f84faf62a3e5dc95a09a5a"),
+    ("encode_text_pgm", {}, "058a0fb52d894e307210636092a4848c5cb39559339e08c81207c76d6ade3cb5"),
+    ("encode_text_bmp32", {}, "baf05ab97d4b8e80a85d78b14a771f3a2bf2c7d1bcbef430e7eda74c2d9a1d85"),
+    ("encode_text_tiff", {}, "1cb90344e1d5a582b9131e83e16d2f78f2767a7706c2d9c6901f9abec9553be9"),
+    ("encode_text_tiff", {"packbits": True}, "5ab4cdcd027f1dab72bf3c70360f3e12fe8b50e057690ed316e985eb3d8d5e4d"),
+    ("encode_text_tiff", {"lzw": True}, "9e5942cfd928bdcef66b7d97b8e7033b109973778f6a235691ef34e65c19b3e5"),
+    ("downsample_images_2x", {}, "3783ecc0843a5e90234abdc2b216ece47e817a12db3f55da0294059be75bb435"),
+]
+
+
+@pytest.mark.parametrize(
+    "name,kwargs,digest",
+    _PAYLOAD_DIGESTS,
+    ids=[n + "".join(f",{k}={v}" for k, v in kw.items()) for n, kw, _ in _PAYLOAD_DIGESTS],
+)
+def test_payload_bytes_pinned(spark, name, kwargs, digest):
+    assert _rows_digest(_encoded(spark, name, kwargs)) == digest
+
+
+def test_one_spark_row_map_in_module():
+    """Every DataFrame wrapper goes through the one `_row_map` helper:
+    the module holds a single mapInPandas call and no hand-written
+    per-wrapper batch loop."""
+    import inspect
+
+    src = inspect.getsource(M)
+    assert src.count("mapInPandas(") == 1
+    assert "def batches" not in src

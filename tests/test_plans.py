@@ -683,6 +683,31 @@ def test_twap_single_user_exchange(spark, qs):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
 
 
+
+def test_sessionize_fold_plan_order(spark, qs):
+    """q93's per-user fold (`sessionize_capped`) carries the last user
+    of each Arrow batch into the next, so it needs every partition
+    hash-partitioned by user and sorted (user, ts, id) when it reaches
+    the mapInPandas.  Bottom-up the plan must read: ONE Exchange
+    hashpartitioning(user_id…) → Sort(user_id, …) → Window → (narrow
+    Project/Filter only) → MapInPandas.  A planner change that moves an
+    exchange or a sort in between must fail here instead of silently
+    splitting sessions."""
+    import re
+
+    plan = _plan(qs["q93_capped_sessionization"](spark, SF_DIR))
+    lines = [re.sub(r"^[\s:+|-]*", "", ln) for ln in plan.splitlines()]
+    top = next(i for i, ln in enumerate(lines) if ln.startswith("MapInPandas fold_partition"))
+    below = lines[top + 1 :]  # the fold's input chain, top-down
+    kinds = [re.split(r"[ (\[]", ln, maxsplit=1)[0] for ln in below]
+    w = kinds.index("Window")
+    assert set(kinds[:w]) <= {"Project", "Filter"}, kinds[:w]
+    assert kinds[w + 1 : w + 3] == ["Sort", "Exchange"], kinds
+    assert below[w + 1].startswith("Sort [user_id")
+    assert below[w + 2].startswith("Exchange hashpartitioning(user_id")
+    assert sum(ln.startswith("Exchange hashpartitioning") for ln in below) == 1
+
+
 def test_stream_scd2_enrich_broadcasts_dim(spark):
     """st24's per-micro-batch plan shape, checked on the batch twin:
     the SCD2 dimension must BROADCAST (equi-key BroadcastHashJoin with
